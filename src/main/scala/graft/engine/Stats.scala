@@ -90,7 +90,7 @@ object Stats {
   /** Robust per-group outlier scan (median/MAD): rows whose value deviates
     * from their group's median by more than `k` times the median absolute
     * deviation — the distribution-plausibility rule a stats engine runs
-    * where a fixed ClosedInterval bound (CoreRules R_QTY_RANGE) can't be
+    * where a fixed ClosedInterval bound (SpanRules.QtyRange) can't be
     * declared up front. Mean/stddev would let one extreme value mask
     * others (a single 10^9 outlier inflates sigma past every real anomaly);
     * the median/MAD pair has a 50% breakdown point.

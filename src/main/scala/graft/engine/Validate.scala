@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.data.DocGen
-import graft.rules.{CoreRules, RuleSet}
+import graft.rules.RuleSet
 
 /** The main validation path: read -> one narrow projection computing the
   * whole violations array + verdict per doc -> violations/verdicts outputs.
@@ -15,24 +15,14 @@ import graft.rules.{CoreRules, RuleSet}
   */
 object Validate {
 
-  /** docs + `violations` array column. Default path: the compiled
-    * SpanViolations expression (one pass per row, compiled Scala). The
-    * declarative Column-algebra corpus below is the semantic reference —
-    * CompiledRulesSpec asserts bit-identical outputs, and the streaming
-    * path runs the declarative columns so stream-equals-batch cross-checks
-    * both. */
+  /** docs + `violations` array column: the compiled SpanViolations
+    * expression (one pass per row, compiled Scala). Batch, streaming,
+    * checkpointed and repair runs all validate through here. */
   def withViolations(docs: DataFrame, catalog: Map[String, String]): DataFrame =
     docs.withColumn("violations",
       graft.functions.SpanViolations(col("spans"),
         catalog.keys.toSeq, DocGen.kindVocab,
         DocGen.versionedCatalog(catalog.keys), DocGen.latestCatalogVersion))
-
-  /** Declarative reference implementation (pure Column algebra). */
-  def withViolationsDeclarative(docs: DataFrame,
-                                catalog: Map[String, String]): DataFrame =
-    docs.withColumn("violations",
-      RuleSet.violationsArray(CoreRules.all(catalog, DocGen.kindVocab,
-        DocGen.versionedCatalog(catalog.keys), DocGen.latestCatalogVersion)))
 
   /** Flat violations table (doc_id, rule_id, severity, path, message).
     *

@@ -2,13 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-/** Column wrappers over Spark's NATIVE bloom-filter expressions (the same
-  * machinery runtime row-group filtering uses — mergeable aggregate, lazy
-  * per-executor deserialization on the probe side). Not exposed in the
-  * public function registry, hence the bridge. */
+/** Column wrapper over Spark's NATIVE bloom-filter aggregate (the same
+  * machinery runtime row-group filtering uses; the probe side is the
+  * compiled BloomContamCount kernel). Not exposed in the public function
+  * registry, hence the bridge. */
 object BloomExprs {
 
   /** Fold LONG values into one serialized bloom filter (binary blob).
@@ -19,9 +18,4 @@ object BloomExprs {
         org.apache.spark.sql.catalyst.expressions.Literal(expectedItems),
         org.apache.spark.sql.catalyst.expressions.Literal(numBits))
         .toAggregateExpression())
-
-  /** Membership probe of a LONG value against a (foldable) blob. */
-  def mightContain(bloom: Column, value: Column): Column =
-    GraftBridge.column(BloomFilterMightContain(
-      GraftBridge.expression(bloom), GraftBridge.expression(value)))
 }

@@ -3,27 +3,29 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.model.Schemas
+import graft.rules.{SpanRule, SpanRules}
 
 /** The ENTIRE span rule corpus as one compiled Catalyst expression.
   *
-  * input:  spans array<struct<kind,text,media_ref,offset>>
-  * output: array<struct<rule_id,severity,path,message>> — bit-identical to
-  *         rules.RuleSet.violationsArray(rules.CoreRules.all(...)), which
-  *         remains the declarative semantic reference (equality asserted in
-  *         CompiledRulesSpec; the streaming path still runs the declarative
-  *         columns, so stream-equals-batch cross-checks both).
+  * input:  spans array<struct<kind,text,media_ref,offset>>; NULL reads as
+  *         the empty array
+  * output: array<struct<rule_id,severity,path,message>>, never NULL — the
+  *         fired rules of graft.rules.SpanRules, in its table order. The
+  *         declarative Column-algebra oracle in the test tree must agree
+  *         bit for bit (CompiledRulesSpec, RulePropertySpec).
   *
   * Why: higher-order functions are interpreted expression trees — the
   * declarative corpus costs ~30 interpreted lambda evaluations per doc.
   * This single pass over the span array does the identical checks in
-  * compiled Scala. Violation rows are prebuilt constants (rule metadata is
-  * static); downstream consumers copy rows into unsafe buffers, so sharing
-  * the instances is safe.
+  * compiled Scala. Only the fire conditions live here; violation rows are
+  * prebuilt from the SpanRules metadata, and downstream consumers copy
+  * rows into unsafe buffers, so sharing the instances is safe.
   */
 case class SpanViolations(child: Expression, catalogKeys: Seq[String],
                           vocab: Seq[String],
@@ -32,7 +34,7 @@ case class SpanViolations(child: Expression, catalogKeys: Seq[String],
   extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(Schemas.violationStruct)
-  override def nullable: Boolean = child.nullable
+  override def nullable: Boolean = false
 
   @transient private lazy val catalogSet: java.util.HashSet[UTF8String] = {
     val s = new java.util.HashSet[UTF8String](catalogKeys.size * 2)
@@ -62,51 +64,13 @@ case class SpanViolations(child: Expression, catalogKeys: Seq[String],
   @transient private lazy val KIND_MEDIA = UTF8String.fromString("media")
   @transient private lazy val SLASH = UTF8String.fromString("/")
 
-  // prebuilt violation rows, in the SAME order as CoreRules.all
-  private def row(id: String, sev: String, path: String, msg: String) =
-    InternalRow(UTF8String.fromString(id), UTF8String.fromString(sev),
-      UTF8String.fromString(path), UTF8String.fromString(msg))
-  @transient private lazy val V_KIND_PRESENT =
-    row("R_KIND_PRESENT", "error", "spans/kind", "span kind must be present")
-  @transient private lazy val V_TEXT_PRESENT =
-    row("R_TEXT_PRESENT", "error", "spans/text", "text span must carry text")
-  @transient private lazy val V_KIND_VOCAB =
-    row("R_KIND_VOCAB", "error", "spans/kind", "span kind must be in vocabulary")
-  @transient private lazy val V_REF_RESOLVES =
-    row("R_MEDIA_REF_RESOLVES", "fatal", "spans/media_ref",
-      "span media_ref must resolve in media catalog")
-  @transient private lazy val V_TEXT_FORMAT =
-    row("R_TEXT_FORMAT", "error", "spans/text",
-      "header text span must match ^[A-Z]{2}$")
-  @transient private lazy val V_QTY_RANGE =
-    row("R_QTY_RANGE", "error", "spans/text", "numeric text span must be in [1,50]")
-  @transient private lazy val V_MEDIA_NO_TEXT =
-    row("R_MEDIA_NO_TEXT", "warning", "spans/text", "media span must not carry text")
-  @transient private lazy val V_OFFSET_ORDER =
-    row("R_OFFSET_ORDER", "error", "spans/offset",
-      "span offsets must be strictly increasing")
-  @transient private lazy val V_SPAN_COUNT =
-    row("R_SPAN_COUNT", "error", "spans", "doc must contain between 1 and 8 spans")
-  @transient private lazy val V_HAS_MEDIA =
-    row("R_HAS_MEDIA", "info", "spans", "doc carries no media span")
-  @transient private lazy val V_ONE_HEADER =
-    row("R_ONE_HEADER", "error", "spans",
-      "doc must contain exactly one header text span at offset 0")
-  @transient private lazy val V_TAIL_EITHER_OR =
-    row("R_TAIL_EITHER_OR", "error", "spans",
-      "every non-initial span must carry text or a media_ref")
-  @transient private lazy val V_TEXT_MEDIA_BALANCE =
-    row("R_TEXT_MEDIA_BALANCE", "error", "spans",
-      "doc must carry at least as many text spans as media spans")
-  @transient private lazy val V_CLASSIFIED =
-    row("R_CLASSIFIED", "error", "spans",
-      "doc must carry a header text span or a media span")
-  @transient private lazy val V_HEADER_OFFSET_EQ =
-    row("R_HEADER_OFFSET_EQ", "error", "spans/offset",
-      "first span must start at the expected offset 0")
-  @transient private lazy val V_REF_VERSION =
-    row("R_REF_VERSION", "error", "spans/media_ref",
-      "media_ref must resolve in its version's catalog (fallback latest)")
+  require(SpanRules.all.size <= 32, "fire bits are one Int")
+  private def bit(r: SpanRule): Int = 1 << r.ordinal
+
+  // prebuilt violation rows, indexed by SpanRule.ordinal
+  @transient private lazy val rows: Array[AnyRef] = SpanRules.all.map(r =>
+    InternalRow(UTF8String.fromString(r.id), UTF8String.fromString(r.severity),
+      UTF8String.fromString(r.path), UTF8String.fromString(r.message))).toArray[AnyRef]
 
   /** byte index of the FIRST '/' in s, or -1 ('/' < 0x80 can never be a
     * UTF-8 continuation byte, so a byte scan is character-safe). */
@@ -144,22 +108,26 @@ case class SpanViolations(child: Expression, catalogKeys: Seq[String],
     v
   }
 
-  override def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
+  override def eval(input: InternalRow): Any =
+    compute(child.eval(input).asInstanceOf[ArrayData])
 
   /** doGenCode keeps the flagship validation projection INSIDE whole-stage
     * codegen: one virtual call per row into this compiled body, instead of
     * the CodegenFallback wrapper that materializes an input row at the
-    * expression boundary. */
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val self = ctx.addReferenceObj("spanViolations", this)
-      s"${ev.value} = $self.compute($c);"
-    })
+    * expression boundary. No null short-circuit: NULL spans reach
+    * `compute`, which reads them as the empty array. */
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val self = ctx.addReferenceObj("spanViolations", this)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        $self.compute(${c.isNull} ? null : ${c.value});""", isNull = FalseLiteral)
+  }
 
   /** Compiled body, shared by interpreted eval and generated code. */
   def compute(spans: ArrayData): ArrayData = {
-    val n = spans.numElements()
+    val n = if (spans == null) 0 else spans.numElements()
     var kindNull, textMissing, badVocab, dangling, badFormat, badRange = false
     var mediaWithText, outOfOrder, hasMedia = false
     var headerCount, textCount, mediaCount = 0
@@ -257,24 +225,34 @@ case class SpanViolations(child: Expression, catalogKeys: Seq[String],
       var r = 1
       while (r < m) { if (!tEitherOk(idx(r))) tailBad = true; r += 1 }
     }
-    val out = new java.util.ArrayList[AnyRef](4)
-    if (kindNull) out.add(V_KIND_PRESENT)
-    if (textMissing) out.add(V_TEXT_PRESENT)
-    if (badVocab) out.add(V_KIND_VOCAB)
-    if (dangling) out.add(V_REF_RESOLVES)
-    if (badFormat) out.add(V_TEXT_FORMAT)
-    if (badRange) out.add(V_QTY_RANGE)
-    if (mediaWithText) out.add(V_MEDIA_NO_TEXT)
-    if (outOfOrder) out.add(V_OFFSET_ORDER)
-    if (n < 1 || n > 8) out.add(V_SPAN_COUNT)
-    if (!hasMedia) out.add(V_HAS_MEDIA)
-    if (headerCount != 1) out.add(V_ONE_HEADER)
-    if (tailBad) out.add(V_TAIL_EITHER_OR)
-    if (textCount < mediaCount) out.add(V_TEXT_MEDIA_BALANCE)
-    if (headerCount == 0 && mediaCount == 0) out.add(V_CLASSIFIED)
-    if (firstOffsetBad) out.add(V_HEADER_OFFSET_EQ)
-    if (refVersionBad) out.add(V_REF_VERSION)
-    new GenericArrayData(out.toArray)
+    import SpanRules._
+    // bit i set = rule SpanRules.all(i) fired
+    var fired = 0
+    if (kindNull) fired |= bit(KindPresent)
+    if (textMissing) fired |= bit(TextPresent)
+    if (badVocab) fired |= bit(KindVocab)
+    if (dangling) fired |= bit(MediaRefResolves)
+    if (badFormat) fired |= bit(TextFormat)
+    if (badRange) fired |= bit(QtyRange)
+    if (mediaWithText) fired |= bit(MediaNoText)
+    if (outOfOrder) fired |= bit(OffsetOrder)
+    if (n < 1 || n > 8) fired |= bit(SpanCount)
+    if (!hasMedia) fired |= bit(HasMedia)
+    if (headerCount != 1) fired |= bit(OneHeader)
+    if (tailBad) fired |= bit(TailEitherOr)
+    if (textCount < mediaCount) fired |= bit(TextMediaBalance)
+    if (headerCount == 0 && mediaCount == 0) fired |= bit(Classified)
+    if (firstOffsetBad) fired |= bit(HeaderOffsetEq)
+    if (refVersionBad) fired |= bit(RefVersion)
+    // lowest bit first: table order
+    val out = new Array[AnyRef](Integer.bitCount(fired))
+    var k = 0
+    while (fired != 0) {
+      out(k) = rows(Integer.numberOfTrailingZeros(fired))
+      fired &= fired - 1
+      k += 1
+    }
+    new GenericArrayData(out)
   }
 
   // per-row scratch for the sorted-tail rule, reused across rows (an

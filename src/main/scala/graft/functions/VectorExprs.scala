@@ -103,11 +103,10 @@ object DotProduct {
   *
   * The +-1 component signs depend only on (plane, component index), so they
   * are computed once per plane per executor and cached — per-row work drops
-  * to nTables x nBits fused dot products with zero hashing, vs the
+  * to nTables x nBits fused dot products with zero hashing, vs an
   * interpreted nested-HOF formulation's nTables x nBits x dim lambda
-  * evaluations AND hash calls (ops/Similarity.lshBucketDeclarative, kept as
-  * the shape reference). Any null element yields NULL (row dropped by the
-  * caller's isNotNull guard, matching the HOF's null-poisoning).
+  * evaluations AND hash calls. Any null element yields NULL (row dropped
+  * by the caller's isNotNull guard).
   */
 case class LshBuckets(child: Expression, nBits: Int, nTables: Int)
   extends UnaryExpression {
@@ -192,8 +191,8 @@ object LshBuckets {
   * vector in one compiled pass. Code j is the L2-argmin over the ksub
   * codebook entries of subspace j (strict < keeps the smallest entry id on
   * ties), with layout cb[(j*ksub + c)*dsub + i] — exactly the arithmetic of
-  * Similarity.pqEncodeDeclarative (equality-asserted in OpsSpec on the
-  * null-free corpus), whose interpreted form pays ~2 x dim x ksub lambda
+  * the declarative HOF twin OpsSpec tests it against (equality-asserted on
+  * the null-free corpus), whose interpreted form pays ~2 x dim x ksub lambda
   * evaluations per row (the argmin fold evaluates each candidate distance
   * twice: once for the comparison, once for the kept struct). This is the
   * corpus-scale hot loop of the IVF-PQ index build — every vector of a
@@ -210,7 +209,7 @@ object LshBuckets {
   * subspace's distances null, the when() never fires, and the fold's
   * initial c = -1 survives — a non-NULL codes array carrying -1, which
   * downstream reconstruction would mis-index. The two agree on every
-  * well-formed vector (the only input the index build feeds them). */
+  * well-formed vector (the only input the index build feeds the kernel). */
 case class PqEncode(child: Expression, cbFlat: Seq[Double], m: Int, ksub: Int)
   extends UnaryExpression {
   require(m > 0 && ksub > 0 && cbFlat.nonEmpty &&

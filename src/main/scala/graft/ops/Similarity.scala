@@ -13,14 +13,10 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Sequential left-fold dot product (deterministic summation order) —
-    * compiled kernel; bit-identical to `dotDeclarative` (asserted in
-    * OpsSpec), which costs ~2 x dim interpreted lambda calls + 2 array
-    * allocations per evaluation. */
+    * compiled kernel; bit-identical to the declarative HOF fold OpsSpec
+    * tests it against, which costs ~2 x dim interpreted lambda calls + 2
+    * array allocations per evaluation. */
   def dot(a: Column, b: Column): Column = graft.functions.DotProduct(a, b)
-
-  /** Declarative HOF reference for `dot`. */
-  def dotDeclarative(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   private def prepared(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -618,32 +614,6 @@ object Similarity {
       yield seedVecs(c)(j * dsub + i)
   }
 
-  /** Declarative PQ-encode twin (shape reference for the compiled
-    * functions.PqEncode, equality-asserted in OpsSpec): per subspace j, the
-    * code is the L2-argmin codebook entry over `col("v")` (strict < keeps
-    * the SMALLEST entry id on ties — the oracle's (dist, c) order).
-    * Row-local O(dim x ksub) arithmetic — exactly the flops PQ encoding
-    * costs anywhere — but the interpreted fold evaluates each candidate
-    * distance twice (comparison + kept struct): ~2 x dim x ksub lambda
-    * calls per row. The index build uses the compiled kernel. */
-  def pqEncodeDeclarative(cb: Column, m: Int, ksub: Int, dsub: Int): Column =
-    transform(sequence(lit(0), lit(m - 1)), j =>
-      aggregate(
-        sequence(lit(0), lit(ksub - 1)),
-        struct(lit(-1).cast("int").as("c"),
-          lit(Double.PositiveInfinity).as("d")),
-        (acc, c) => {
-          val dist = aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0),
-            (s, i) => {
-              val x = element_at(col("v"), j * dsub + i + 1)
-              val y = element_at(cb, (j * ksub + c) * dsub + i + 1)
-              s + (x - y) * (x - y)
-            })
-          when(dist < acc.getField("d"),
-            struct(c.cast("int").as("c"), dist.as("d"))).otherwise(acc)
-        },
-        acc => acc.getField("c")))
-
   /** Reconstruct the quantized vector from its codes (codebook slices in
     * subspace order) — used once at build time for the stored norm. */
   private def pqRecon(codes: Column, cb: Column,
@@ -838,24 +808,6 @@ object Similarity {
         .select(col("q_vec_id"), col("n_vec_id"),
           (dot(col("qv"), col("v")) / (col("qn") * col("norm"))).as("score")), k)
   }
-
-  /** Declarative random-hyperplane signature (shape reference for the
-    * compiled functions.LshBuckets): bit j = sign of <v, h_j> where h_j has
-    * deterministic +-1 components derived from xxhash64(seedOffset+j,
-    * component index). Different seedOffsets give independent hash tables.
-    * Interpreted nested-HOF: nBits x dim lambda evals per vector — use the
-    * compiled kernel on hot paths. */
-  def lshBucketDeclarative(v: Column, nBits: Int, seedOffset: Int = 0): Column =
-    aggregate(
-      sequence(lit(0), lit(nBits - 1)), lit(0L),
-      (acc, j) => acc + when(
-        aggregate(
-          zip_with(v, sequence(lit(0), size(v) - 1), (x, i) =>
-            x * when(pmod(xxhash64(j + seedOffset, i), lit(2)) === 0, lit(1.0))
-              .otherwise(lit(-1.0))),
-          lit(0.0), (s, x) => s + x) > 0,
-        pow(lit(2.0), j.cast("double")).cast("long")
-      ).otherwise(lit(0L)))
 
   /** Approximate NN via multi-table random-hyperplane LSH: a candidate is
     * considered for a query if they share the full nBits signature in ANY

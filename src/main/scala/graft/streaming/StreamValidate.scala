@@ -3,17 +3,17 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.rules.{CoreRules, RuleSet}
 
 /** Structured Streaming front-end for the same rule corpus.
   *
   * The reference is a synchronous request/response service (no streams,
   * MTBValidationService.scala:15-19); our batch engine is the primary path.
-  * This module shows the rule columns are execution-mode agnostic: the
-  * identical violations/verdict expressions run over `readStream` micro-
-  * batches (incremental ingest validation), plus a watermarked tumbling-
-  * window aggregation for streaming metrics — the two standard streaming
-  * shapes (stateless transform; windowed stateful agg).
+  * This module shows the validation path is execution-mode agnostic: the
+  * batch verdict path (compiled rule kernel + verdict projection) runs
+  * unchanged over `readStream` micro-batches (incremental ingest
+  * validation), plus a watermarked tumbling-window aggregation for
+  * streaming metrics — the two standard streaming shapes (stateless
+  * transform; windowed stateful agg).
   */
 object StreamValidate {
 
@@ -30,19 +30,14 @@ object StreamValidate {
     StructField("user_id", LongType), StructField("event_type", StringType),
     StructField("value", DoubleType), StructField("props", StringType)))
 
-  /** Streaming verdicts: readStream -> span derivation -> THE SAME rule
-    * corpus -> per-doc verdict rows, continuously. */
+  /** Streaming verdicts: readStream -> span derivation -> the batch verdict
+    * path (Validate.verdicts) -> per-doc verdict rows, continuously. */
   def verdictStream(spark: SparkSession, inputDir: String,
-                    catalog: Map[String, String]): DataFrame = {
-    val li = spark.readStream.schema(lineitemSchema).parquet(inputDir)
-    val docs = graft.data.DocGen.docsFrom(li)
-    docs
-      .withColumn("violations",
-        RuleSet.violationsArray(CoreRules.all(catalog, graft.data.DocGen.kindVocab,
-          graft.data.DocGen.versionedCatalog(catalog.keys),
-          graft.data.DocGen.latestCatalogVersion)))
-      .select(col("doc_id") +: RuleSet.verdictCols(col("violations")): _*)
-  }
+                    catalog: Map[String, String]): DataFrame =
+    graft.engine.Validate.verdicts(
+      graft.data.DocGen.docsFrom(
+        spark.readStream.schema(lineitemSchema).parquet(inputDir)),
+      catalog)
 
   val documentsSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType),

@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.data.DocGen
 import graft.engine.Validate
+import graft.rules.{CoreRules, RuleSet}
 
 /** The compiled SpanViolations expression must be indistinguishable from
-  * the declarative Column-algebra rule corpus on the full injected-violation
-  * dataset (every rule class fires somewhere at sf0.001). */
+  * the declarative Column-algebra test oracle (rules.CoreRules) on the full
+  * injected-violation dataset (every rule class fires somewhere at
+  * sf0.001) and on hand-picked edge docs. */
 class CompiledRulesSpec extends SparkSpec {
 
   test("compiled rule corpus == declarative rule corpus (violations)") {
@@ -14,7 +16,7 @@ class CompiledRulesSpec extends SparkSpec {
     val docs = DocGen.docs(spark, sf)
     val compiled = Validate.withViolations(docs, catalog)
       .select("doc_id", "violations")
-    val declarative = Validate.withViolationsDeclarative(docs, catalog)
+    val declarative = CoreRules.withViolations(docs, catalog)
       .select("doc_id", "violations")
     assert(compiled.count() == declarative.count())
     assert(compiled.exceptAll(declarative).isEmpty &&
@@ -34,12 +36,26 @@ class CompiledRulesSpec extends SparkSpec {
         graft.model.Span(Some("text"), Some("0"), None, 0),
         graft.model.Span(Some("text"), Some("0"), None, 0))),
       graft.model.Doc("e4", (1 to 9).map(i =>
-        graft.model.Span(Some("media"), None, Some("m1"), i)))
+        graft.model.Span(Some("media"), None, Some("m1"), i))),
+      // NULL spans read as the empty array on both paths
+      graft.model.Doc("e5", null)
     ).toDS().toDF()
     val catalog = Map("m1" -> "image")
     val a = Validate.withViolations(edge, catalog).select("doc_id", "violations")
-    val b = Validate.withViolationsDeclarative(edge, catalog).select("doc_id", "violations")
+    val b = CoreRules.withViolations(edge, catalog).select("doc_id", "violations")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    val emptyIds = Seq("R_SPAN_COUNT", "R_HAS_MEDIA", "R_ONE_HEADER", "R_CLASSIFIED")
+    // a local relation evaluates the kernel interpreted; past an exchange it
+    // runs in generated code
+    val generated = Validate.withViolations(edge.repartition(1), catalog)
+    Seq(a, b, generated).foreach { v =>
+      val nullDoc = v.where(col("doc_id") === "e5")
+        .select(col("violations.rule_id").as("ids") +: RuleSet.verdictCols(col("violations")): _*)
+        .head()
+      assert(nullDoc.getSeq[String](0) == emptyIds)
+      assert(nullDoc.getString(1) == "invalid")
+      assert((2 to 5).map(nullDoc.getInt) == Seq(0, 3, 0, 1))
+    }
   }
 
   test("malformed docs: null span elements and overflow numerics don't crash") {
@@ -57,7 +73,7 @@ class CompiledRulesSpec extends SparkSpec {
     ).toDS().toDF()
     val catalog = Map("m1" -> "image")
     val a = Validate.withViolations(edge, catalog).select("doc_id", "violations")
-    val b = Validate.withViolationsDeclarative(edge, catalog).select("doc_id", "violations")
+    val b = CoreRules.withViolations(edge, catalog).select("doc_id", "violations")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     val fired = Validate.violations(edge, catalog)
       .select("doc_id", "rule_id").as[(String, String)].collect().toSet
@@ -65,8 +81,8 @@ class CompiledRulesSpec extends SparkSpec {
     assert(!fired.contains(("n1", "R_OFFSET_ORDER")))
     assert(fired.contains(("o1", "R_QTY_RANGE")))
     assert(fired.contains(("o2", "R_QTY_RANGE")))
-    // declarative streaming path runs the same corpus without crashing
-    val bFired = Validate.withViolationsDeclarative(edge, catalog)
+    // the declarative oracle runs the same docs without crashing too
+    val bFired = CoreRules.withViolations(edge, catalog)
       .select(col("doc_id"), explode(col("violations.rule_id")).as("rule_id"))
       .as[(String, String)].collect().toSet
     assert(bFired.contains(("o1", "R_QTY_RANGE")))

@@ -1,10 +1,44 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.ops._
 
+/** Declarative HOF twins of the compiled vector kernels: the references
+  * OpsSpec asserts DotProduct and PqEncode against. */
+object OpsSpec {
+
+  /** Sequential left-fold dot product, the reference for Similarity.dot. */
+  def dotDeclarative(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
+
+  /** PQ-encode twin of functions.PqEncode: per subspace j, the code is the
+    * L2-argmin codebook entry over `col("v")` (strict < keeps the SMALLEST
+    * entry id on ties — the oracle's (dist, c) order). The interpreted fold
+    * evaluates each candidate distance twice (comparison + kept struct):
+    * ~2 x dim x ksub lambda calls per row. */
+  def pqEncodeDeclarative(cb: Column, m: Int, ksub: Int, dsub: Int): Column =
+    transform(sequence(lit(0), lit(m - 1)), j =>
+      aggregate(
+        sequence(lit(0), lit(ksub - 1)),
+        struct(lit(-1).cast("int").as("c"),
+          lit(Double.PositiveInfinity).as("d")),
+        (acc, c) => {
+          val dist = aggregate(sequence(lit(0), lit(dsub - 1)), lit(0.0),
+            (s, i) => {
+              val x = element_at(col("v"), j * dsub + i + 1)
+              val y = element_at(cb, (j * ksub + c) * dsub + i + 1)
+              s + (x - y) * (x - y)
+            })
+          when(dist < acc.getField("d"),
+            struct(c.cast("int").as("c"), dist.as("d"))).otherwise(acc)
+        },
+        acc => acc.getField("c")))
+}
+
 class OpsSpec extends SparkSpec {
   import spark.implicits._
+  import OpsSpec._
 
   private lazy val documents = spark.read.parquet(s"$sf/documents.parquet").cache()
   private lazy val embeddings = spark.read.parquet(s"$sf/embeddings.parquet").cache()
@@ -335,7 +369,7 @@ class OpsSpec extends SparkSpec {
         yield seeds(c)(j * dsub + i)).toList
     val both = e.select(
       graft.functions.PqEncode(col("v"), cbFlat, m, ksub).as("c"),
-      Similarity.pqEncodeDeclarative(typedLit(cbFlat), m, ksub, dsub).as("d"))
+      pqEncodeDeclarative(typedLit(cbFlat), m, ksub, dsub).as("d"))
     assert(both.count() > 0)
     assert(both.where(!(col("c") <=> col("d"))).count() == 0,
       "compiled PQ codes must equal the declarative argmin bit-for-bit")
@@ -347,7 +381,7 @@ class OpsSpec extends SparkSpec {
     val pairs = e.alias("a").crossJoin(e.alias("b").limit(3))
       .select(
         Similarity.dot(col("a.v"), col("b.v")).as("c"),
-        Similarity.dotDeclarative(col("a.v"), col("b.v")).as("d"))
+        dotDeclarative(col("a.v"), col("b.v")).as("d"))
     assert(pairs.where(!(col("c") <=> col("d"))).count() == 0)
     // length mismatch and null elements -> NULL on both paths
     val edge = Seq(
@@ -355,7 +389,7 @@ class OpsSpec extends SparkSpec {
       (Seq(1.0, 2.0), Seq(1.0, 2.0, 3.0))
     ).toDF("x", "y")
     val both = edge.select(Similarity.dot(col("x"), col("y")).as("c"),
-      Similarity.dotDeclarative(col("x"), col("y")).as("d"))
+      dotDeclarative(col("x"), col("y")).as("d"))
     assert(both.where(col("c").isNotNull || col("d").isNotNull).count() == 0)
   }
 

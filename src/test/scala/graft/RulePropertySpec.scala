@@ -2,6 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, rng}
 import graft.engine.Validate
+import graft.rules.CoreRules
 import graft.model.{Doc, Span}
 
 /** Property-style equivalence: the compiled SpanViolations expression and
@@ -44,7 +45,7 @@ class RulePropertySpec extends SparkSpec {
     val catalog = Map("m1" -> "image", "m2" -> "audio")
     val df = docs.toDS().toDF()
     val a = Validate.withViolations(df, catalog).select("doc_id", "violations")
-    val b = Validate.withViolationsDeclarative(df, catalog).select("doc_id", "violations")
+    val b = CoreRules.withViolations(df, catalog).select("doc_id", "violations")
     val onlyA = a.exceptAll(b).select("doc_id").as[String].collect()
     val onlyB = b.exceptAll(a).select("doc_id").as[String].collect()
     assert(onlyA.isEmpty && onlyB.isEmpty,

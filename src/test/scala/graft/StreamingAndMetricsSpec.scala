@@ -76,7 +76,10 @@ class StreamingAndMetricsSpec extends SparkSpec {
   test("streaming verdicts over micro-batches equal the batch pass") {
     val dir = stage("lineitem")
     val catalog = DocGen.mediaCatalogMap(spark, sf)
-    val q = StreamValidate.verdictStream(spark, dir, catalog)
+    val stream = StreamValidate.verdictStream(spark, dir, catalog)
+    // the stream runs the batch path's compiled rule kernel
+    assert(stream.queryExecution.analyzed.toString.contains("span_violations"))
+    val q = stream
       .writeStream.format("memory").queryName("stream_verdicts")
       .outputMode("append").start()
     try { q.processAllAvailable() } finally q.stop()
