@@ -1,6 +1,7 @@
 package graft.data
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
 import graft.model.Schemas
 
@@ -55,42 +56,41 @@ object DocGen {
     val ok = col("l_orderkey")
     val pkmod = (col("l_partkey") % 1000).cast("string")
     val flagText = concat(col("l_returnflag"), col("l_linestatus"))
+    val noString = lit(null).cast("string")
 
-    val s0 = struct(
-      when(ok % 89 === 0, lit(null).cast("string")).otherwise(lit("text")).as("kind"),
-      when(ok % 73 === 0, lower(flagText)).otherwise(flagText).as("text"),
-      lit(null).cast("string").as("media_ref"),
-      when(ok % 43 === 0, lit(7)).otherwise(lit(0)).as("offset"))
+    val s0 = span(
+      when(ok % 89 === 0, noString).otherwise(lit("text")),
+      when(ok % 73 === 0, lower(flagText)).otherwise(flagText),
+      noString,
+      when(ok % 43 === 0, lit(7)).otherwise(lit(0)))
 
-    val s1 = struct(
-      when(ok % 83 === 0, lit("blob")).otherwise(lit("media")).as("kind"),
-      when(ok % 67 === 0, lit("leak")).otherwise(lit(null).cast("string")).as("text"),
+    val s1 = span(
+      when(ok % 83 === 0, lit("blob")).otherwise(lit("media")),
+      when(ok % 67 === 0, lit("leak")).otherwise(noString),
       when(ok % 79 === 0, concat(lit("x"), pkmod))
         .when(ok % 41 === 0, concat(lit("v1/m"), pkmod))
-        .otherwise(concat(lit("m"), pkmod)).as("media_ref"),
-      lit(10).as("offset"))
+        .otherwise(concat(lit("m"), pkmod)),
+      lit(10))
 
-    val s2 = struct(
-      lit("text").as("kind"),
-      when(ok % 53 === 0, lit(null).cast("string"))
+    val s2 = span(
+      lit("text"),
+      when(ok % 53 === 0, noString)
         .when(ok % 61 === 0, lit("999"))
-        .otherwise(col("l_quantity").cast("int").cast("string")).as("text"),
-      lit(null).cast("string").as("media_ref"),
-      when(ok % 97 === 0, lit(5)).otherwise(lit(20)).as("offset"))
+        .otherwise(col("l_quantity").cast("int").cast("string")),
+      noString,
+      when(ok % 97 === 0, lit(5)).otherwise(lit(20)))
 
     // extra spans for the record-level composite rules
-    val s3 = struct(lit("text").as("kind"), lit("AB").as("text"),
-      lit(null).cast("string").as("media_ref"), lit(0).as("offset"))
-    def mediaTail(offset: Int) = struct(lit("media").as("kind"),
-      lit(null).cast("string").as("text"),
-      concat(lit("m"), pkmod).as("media_ref"), lit(offset).as("offset"))
+    val s3 = span(lit("text"), lit("AB"), noString, lit(0))
+    def mediaTail(offset: Int) =
+      span(lit("media"), noString, concat(lit("m"), pkmod), lit(offset))
 
+    // a constant: folded to a literal, never cast per row
     val none = array().cast(Schemas.spanArray)
     val spansArr = concat(
-      array(s0, s1, s2).cast(Schemas.spanArray),
-      when(ok % 59 === 0, array(s3).cast(Schemas.spanArray)).otherwise(none),
-      when(ok % 47 === 0, array(mediaTail(30), mediaTail(40)).cast(Schemas.spanArray))
-        .otherwise(none))
+      array(s0, s1, s2),
+      when(ok % 59 === 0, array(s3)).otherwise(none),
+      when(ok % 47 === 0, array(mediaTail(30), mediaTail(40))).otherwise(none))
 
     li.select(
       concat(ok.cast("string"), lit("-"), col("l_linenumber").cast("string")).as("doc_id") +:
@@ -98,27 +98,55 @@ object DocGen {
         keep.map(col): _*)
   }
 
+  /** One span struct typed exactly as Schemas.spanStruct, every field
+    * nullable, so the span arrays need no cast to the span-array type (in
+    * generated code such a cast copies every span struct of every doc). */
+  private def span(kind: Column, text: Column, mediaRef: Column, offset: Column): Column =
+    struct(Seq(kind, text, mediaRef, offset).zip(Schemas.spanStruct.fieldNames).map {
+      case (c, name) => GraftBridge.column(KnownNullable(GraftBridge.expression(c))).as(name)
+    }: _*)
+
+  /** The media catalog's columns over a part-key residue `res`: `m<res>`
+    * and its media kind. Declared once, for the catalog DataFrame and the
+    * map. */
+  private val catalogCols: Seq[Column] = {
+    val res = col("res")
+    Seq(
+      concat(lit("m"), res.cast("string")).as("media_ref"),
+      element_at(
+        typedLit(Seq("image", "audio", "video")), (res % 3 + 1).cast("int")
+      ).as("media_kind"))
+  }
+
+  /** `res = p_partkey % 1000` of every part row, read with a declared
+    * schema (no schema-inference job). A null p_partkey, or a missing
+    * column (which a declared schema reads as null), fails the scan loudly. */
+  private def partResidues(spark: SparkSession, sfDir: String): DataFrame = {
+    val path = s"$sfDir/part.parquet"
+    val pk = col("p_partkey")
+    spark.read.schema("p_partkey BIGINT").parquet(path)
+      .select(when(pk.isNull, raise_error(lit(s"null or missing p_partkey in $path")))
+        .otherwise(pk % 1000).as("res"))
+  }
+
   /** Media catalog dimension: every valid media_ref + its media kind.
     * Referential target for span.media_ref (the analog of the reference's
     * resolver map at MTBValidators.scala:669-678). */
-  def mediaCatalog(spark: SparkSession, sfDir: String): DataFrame = {
-    val part = spark.read.parquet(s"$sfDir/part.parquet")
-    val res = col("p_partkey") % 1000
-    part
-      .select(
-        concat(lit("m"), res.cast("string")).as("media_ref"),
-        element_at(
-          typedLit(Seq("image", "audio", "video")), (res % 3 + 1).cast("int")
-        ).as("media_kind"))
-      .distinct()
-  }
+  def mediaCatalog(spark: SparkSession, sfDir: String): DataFrame =
+    partResidues(spark, sfDir).select(catalogCols: _*).distinct()
 
   /** Collected catalog as a driver-side map for the broadcast row-local
     * membership path (dimension is small; the join-based path for large
-    * catalogs lives in engine.Referential). */
-  def mediaCatalogMap(spark: SparkSession, sfDir: String): Map[String, String] =
-    mediaCatalog(spark, sfDir).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    * catalogs lives in engine.Referential). One job and no Exchange: each
+    * scan task de-duplicates its residues, so at most partitions x 1000
+    * rows are collected, and `toMap` merges them. */
+  def mediaCatalogMap(spark: SparkSession, sfDir: String): Map[String, String] = {
+    import spark.implicits._
+    partResidues(spark, sfDir).as[Long]
+      .mapPartitions(_.distinct)
+      .toDF("res").select(catalogCols: _*)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+  }
 
   /** Closed kind vocabulary (the `CodedEnum` analog, MTBValidators.scala:62-65). */
   val kindVocab: Seq[String] = Seq("text", "media")

@@ -204,13 +204,19 @@ object Checkpoint {
     * evaluations vs calling [[storeRunRuleMetrics]] per run — at 100 TB
     * that is one full validation pass instead of two. Counts are
     * bit-identical to the per-run calls (each doc's violations are
-    * independent of the other docs). */
+    * independent of the other docs). A violation row whose `runId` is NULL
+    * or outside `runs` fails the write: it would land in a partition no
+    * marker row names, invisible to every stored-run query. */
   def storeRunRuleMetricsSplit(docs: DataFrame, catalog: Map[String, String],
                                outDir: String, runId: Column,
                                runs: Seq[String]): Unit =
     TableIO.overwritePartitions(
       Validate.violations(docs, catalog)
         .withColumn("run_id", runId)
+        .withColumn("run_id", when(col("run_id").isin(runs: _*), col("run_id"))
+          .otherwise(raise_error(concat(lit("run_id outside runs "),
+            lit(runs.mkString("[", ", ", "]")), lit(": "),
+            coalesce(col("run_id").cast("string"), lit("NULL"))))))
         .groupBy("run_id", "rule_id").agg(count(lit(1)).as("count"))
         .select("run_id", "rule_id", "count")
         .unionAll(markerRows(docs.sparkSession, runs)),

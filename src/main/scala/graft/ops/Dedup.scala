@@ -356,6 +356,16 @@ object Dedup {
     * O(log n) rounds); propagation is the diameter-bounded special case.
     */
   def dupClusters(pairs: DataFrame, maxIter: Int = 12): DataFrame = {
+    // the convergence checksum below sums labels as decimal(38,0): a
+    // non-numeric label casts to NULL outside ANSI mode, which makes every
+    // round's checksum equal and "converges" after one round with
+    // half-merged clusters
+    Seq("doc_id_a", "doc_id_b").foreach { c =>
+      import org.apache.spark.sql.types._
+      val t = pairs.schema(c).dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"dupClusters needs integral doc ids, got $c: ${t.simpleString}")
+    }
     // both edge directions from ONE pass over the (possibly expensive) pair
     // pipeline — a unionAll of two selects would execute it twice
     val edges = pairs.select(explode(array(

@@ -637,6 +637,9 @@ object Similarity {
                       m: Int = 8, ksub: Int = 16): Unit = {
     val e = prepared(emb)
     val cents = collectCentroids(seedCentroids(e, nQueries, nCells))
+    // checked before the data write: the header divides by the cell count
+    require(cents.ids.nonEmpty,
+      s"ivfPqBuildIndex: empty coarse quantizer (nCells=$nCells, no seed vectors)")
     val cands = e.where(col("vec_id") >= nQueries)
     val cbFlat = pqCodebookFlat(e, nQueries, m, ksub)
     val dsub = cbFlat.size / (m * ksub)

@@ -87,17 +87,15 @@ object SpanRules {
   */
 object RuleSet {
 
-  private def countSev(v: Column, sev: String): Column =
-    size(filter(v, x => x.getField("severity") === sev))
-
   /** Verdict columns from a violations array column, mirroring the
     * reference's triage (fatal => rejected, cf. FatalIssuesDetected at
-    * Tests.scala:47-54; SURVEY.md §2.4 verdict CASE). */
+    * Tests.scala:47-54; SURVEY.md §2.4 verdict CASE). The four counts come
+    * from one compiled pass over the array (functions.SeverityCounts),
+    * which subexpression elimination evaluates once per doc. */
   def verdictCols(v: Column): Seq[Column] = {
-    val nFatal = countSev(v, "fatal")
-    val nError = countSev(v, "error")
-    val nWarn = countSev(v, "warning")
-    val nInfo = countSev(v, "info")
+    val counts = graft.functions.SeverityCounts(v)
+    val Seq(nFatal, nError, nWarn, nInfo) =
+      graft.functions.SeverityCounts.counted.map { case (f, _) => counts.getField(f) }
     Seq(
       when(nFatal > 0, lit("rejected"))
         .when(nError > 0, lit("invalid"))

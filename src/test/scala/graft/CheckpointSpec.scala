@@ -52,6 +52,25 @@ class CheckpointSpec extends SparkSpec {
       .count() == 1)
   }
 
+  test("split run metrics: a misrouted run_id fails loudly, never sheds rows") {
+    val docs = DocGen.docs(spark, sf)
+    val cat = DocGen.mediaCatalogMap(spark, sf)
+    val parity = element_at(split(col("doc_id"), "-"), 1).cast("bigint") % 2
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    Seq(
+      // NULL for odd docs: the rows would land in the default partition
+      when(parity === 0, "base"),
+      // a run id outside `runs`: a partition no marker row names
+      when(parity === 0, "base").otherwise("curr")
+    ).foreach { runId =>
+      val dir = Files.createTempDirectory("graft-runsplit").toString
+      val e = intercept[Exception](
+        Checkpoint.storeRunRuleMetricsSplit(docs, cat, dir, runId, Seq("base", "cur")))
+      assert(messages(e).exists(_.contains("run_id outside runs")), s"got: $e")
+    }
+  }
+
   test("resume after mid-run failure completes and equals a one-shot run") {
     val dir = Files.createTempDirectory("graft-ckpt").toString
     // attempt 1 dies before bucket 5

@@ -80,6 +80,14 @@ class OpsSpec extends SparkSpec {
     intercept[IllegalStateException](Dedup.dupClusters(chain, maxIter = 3))
   }
 
+  test("dedup clusters: non-numeric doc ids fail fast instead of mis-converging") {
+    // '123-4'-style ids would cast to a NULL checksum, equal every round
+    val pairs = Seq(("123-4", "123-5"), ("123-5", "124-1"))
+      .toDF("doc_id_a", "doc_id_b")
+    val e = intercept[IllegalArgumentException](Dedup.dupClusters(pairs))
+    assert(e.getMessage.contains("integral doc ids"), e.getMessage)
+  }
+
   test("dedup exact: finds exactly the injected copies") {
     val dups = Dedup.exactDuplicates(Dedup.corpusWithExactDups(documents))
     val expected = documents.where(col("doc_id") % 50 === 0).count()
@@ -312,6 +320,24 @@ class OpsSpec extends SparkSpec {
     assert(refRecall >= recall,
       s"refined recall $refRecall below plain PQ recall $recall")
     assert(refRecall >= 0.8, s"refined recall vs full-precision IVF: $refRecall")
+  }
+
+  test("IVF-PQ build over an empty quantizer fails before writing the index") {
+    val base = java.nio.file.Files.createTempDirectory("graft-pq-empty").toString
+    // empty corpus: no seed vectors for the codebook or the coarse cells
+    val empty = java.nio.file.Paths.get(base, "empty")
+    val e1 = intercept[IllegalArgumentException](
+      Similarity.ivfPqBuildIndex(embeddings.where(lit(false)), empty.toString))
+    assert(e1.getMessage.contains("empty coarse quantizer"), e1.getMessage)
+    // no coarse cells over a non-empty corpus
+    val noCells = java.nio.file.Paths.get(base, "nocells")
+    val e2 = intercept[IllegalArgumentException](
+      Similarity.ivfPqBuildIndex(embeddings, noCells.toString, nCells = 0))
+    assert(e2.getMessage.contains("empty coarse quantizer"), e2.getMessage)
+    Seq(empty, noCells).foreach { p =>
+      assert(!java.nio.file.Files.exists(p), s"$p written")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p + "_header")))
+    }
   }
 
   test("lshParams: corpus-sized tables, recall-solved table count") {
