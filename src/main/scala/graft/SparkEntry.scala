@@ -329,24 +329,26 @@ object SparkEntry {
     // trained-quantizer variant (distributed Lloyd k-means; rows-only —
     // learned centroids are float-nondeterministic, recall-tested in spec)
     "sim_ann_ivf_kmeans" -> ((s, d) =>
-      ops.Similarity.ivfTopKKmeans(graft.data.Tables.read(s, d, "embeddings"))),
+      ops.Similarity.ivfTopK(graft.data.Tables.read(s, d, "embeddings"),
+        quantizer = ops.Similarity.kmeansCentroids)),
     // persisted-index variant: build inverted lists partitioned by cell_id
-    // once, then probe with static partition pruning (rows-only check —
-    // approximate op; equality with the one-shot IVF asserted in OpsSpec)
+    // once, then probe with static partition pruning (oracle-exact via
+    // ivfOracleSql — the probe equals the one-shot IVF, asserted in OpsSpec)
     "sim_ann_ivf_index" -> ((s, d) => {
       val emb = graft.data.Tables.read(s, d, "embeddings")
       val path = artifactPath("ivf_index", d)
-      ops.Similarity.ivfBuildIndex(emb, path)
+      ops.Similarity.ivfBuildIndex(emb, path, ops.Similarity.Flat)
       ops.Similarity.ivfProbeIndex(s, path, emb)
     }),
     // the production composition: IVF cells OF SQ8 codes — persisted
-    // cell-partitioned 8-bit index + sidecar quantization metadata, probed
-    // with static partition pruning and asymmetric re-rank
+    // cell-partitioned 8-bit index whose header carries the quantization
+    // parameters, probed with static partition pruning and asymmetric
+    // re-rank
     "sim_ann_ivf_sq8" -> ((s, d) => {
       val emb = graft.data.Tables.read(s, d, "embeddings")
       val path = artifactPath("ivf_sq8", d)
-      ops.Similarity.ivfSq8BuildIndex(emb, path)
-      ops.Similarity.ivfSq8ProbeIndex(s, path, emb)
+      ops.Similarity.ivfBuildIndex(emb, path, ops.Similarity.Sq8)
+      ops.Similarity.ivfProbeIndex(s, path, emb)
     }),
     // IVF-PQ (Jegou et al. 2011): coarse cells of m=8 product-quantizer
     // codes (ksub=16 deterministic seed codebooks, dim/m x smaller at rest
@@ -355,8 +357,8 @@ object SparkEntry {
     "sim_ann_ivf_pq" -> ((s, d) => {
       val emb = graft.data.Tables.read(s, d, "embeddings")
       val path = artifactPath("ivf_pq", d)
-      ops.Similarity.ivfPqBuildIndex(emb, path)
-      ops.Similarity.ivfPqProbeIndex(s, path, emb)
+      ops.Similarity.ivfBuildIndex(emb, path, ops.Similarity.Pq())
+      ops.Similarity.ivfProbeIndex(s, path, emb)
     }),
     // two-stage serving path: ADC shortlist (rerankR=50 per query) from
     // the PQ index, then ONLY those rows fetch full-precision vectors for
@@ -364,19 +366,20 @@ object SparkEntry {
     "sim_ann_ivf_pq_refined" -> ((s, d) => {
       val emb = graft.data.Tables.read(s, d, "embeddings")
       val path = artifactPath("ivf_pq_ref", d)
-      ops.Similarity.ivfPqBuildIndex(emb, path)
-      ops.Similarity.ivfPqProbeRefined(s, path, emb)
+      ops.Similarity.ivfBuildIndex(emb, path, ops.Similarity.Pq())
+      ops.Similarity.ivfProbeRefined(s, path, emb)
     }),
     // incremental ANN ingest: index built on vec_id < 300, the rest
-    // appended against the index's OWN stored quantizer sidecars (the
-    // corpus is never re-read) — probe result identical to the one-shot
-    // build, so the same oracle applies
+    // appended against the index's OWN stored header (the corpus is never
+    // re-read) — probe result identical to the one-shot build, so the same
+    // oracle applies
     "sim_ann_ivf_pq_incremental" -> ((s, d) => {
       val emb = graft.data.Tables.read(s, d, "embeddings")
       val path = artifactPath("ivf_pq_inc", d)
-      ops.Similarity.ivfPqBuildIndex(emb.where(col("vec_id") < 300), path)
-      ops.Similarity.ivfPqAppendIndex(s, path, emb.where(col("vec_id") >= 300))
-      ops.Similarity.ivfPqProbeIndex(s, path, emb)
+      ops.Similarity.ivfBuildIndex(emb.where(col("vec_id") < 300), path,
+        ops.Similarity.Pq())
+      ops.Similarity.ivfAppendIndex(s, path, emb.where(col("vec_id") >= 300))
+      ops.Similarity.ivfProbeIndex(s, path, emb)
     }),
     // (5, 12) pinned: sandbox-validated exactness-gate parameters (the
     // oracle is exhaustive all-pairs, so a single candidate miss fails the

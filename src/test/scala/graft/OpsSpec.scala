@@ -291,10 +291,10 @@ class OpsSpec extends SparkSpec {
 
   test("similarity: IVF-PQ index — ADC probe, pruning, compression, recall") {
     val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString + "/index"
-    Similarity.ivfPqBuildIndex(embeddings, dir)
-    val p1 = Similarity.ivfPqProbeIndex(spark, dir, embeddings)
+    Similarity.ivfBuildIndex(embeddings, dir, Similarity.Pq())
+    val p1 = Similarity.ivfProbeIndex(spark, dir, embeddings)
     // deterministic across probes of the same persisted index
-    assert(p1.collect().toSet == Similarity.ivfPqProbeIndex(spark, dir, embeddings)
+    assert(p1.collect().toSet == Similarity.ivfProbeIndex(spark, dir, embeddings)
       .collect().toSet)
     // static cell pruning on the index read, as with the other IVF probes
     val plan = p1.queryExecution.executedPlan.toString
@@ -314,7 +314,7 @@ class OpsSpec extends SparkSpec {
     // the two-stage refined probe re-ranks the ADC shortlist with exact
     // cosine — recall must not drop below the plain PQ probe's and should
     // approach full precision
-    val refined = Similarity.ivfPqProbeRefined(spark, dir, embeddings)
+    val refined = Similarity.ivfProbeRefined(spark, dir, embeddings)
       .select("q_vec_id", "n_vec_id").as[(Long, Long)].collect().toSet
     val refRecall = (ivf & refined).size.toDouble / ivf.size
     assert(refRecall >= recall,
@@ -323,21 +323,57 @@ class OpsSpec extends SparkSpec {
   }
 
   test("IVF-PQ build over an empty quantizer fails before writing the index") {
-    val base = java.nio.file.Files.createTempDirectory("graft-pq-empty").toString
-    // empty corpus: no seed vectors for the codebook or the coarse cells
-    val empty = java.nio.file.Paths.get(base, "empty")
-    val e1 = intercept[IllegalArgumentException](
-      Similarity.ivfPqBuildIndex(embeddings.where(lit(false)), empty.toString))
-    assert(e1.getMessage.contains("empty coarse quantizer"), e1.getMessage)
-    // no coarse cells over a non-empty corpus
-    val noCells = java.nio.file.Paths.get(base, "nocells")
-    val e2 = intercept[IllegalArgumentException](
-      Similarity.ivfPqBuildIndex(embeddings, noCells.toString, nCells = 0))
-    assert(e2.getMessage.contains("empty coarse quantizer"), e2.getMessage)
-    Seq(empty, noCells).foreach { p =>
-      assert(!java.nio.file.Files.exists(p), s"$p written")
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p + "_header")))
+    // every codec shares the build path, so every codec fails the same way
+    Seq(Similarity.Flat, Similarity.Sq8, Similarity.Pq()).foreach { codec =>
+      val base = java.nio.file.Files.createTempDirectory("graft-ivf-empty").toString
+      // empty corpus: no seed vectors for the codec or the coarse cells
+      val empty = java.nio.file.Paths.get(base, "empty")
+      val e1 = intercept[IllegalArgumentException](
+        Similarity.ivfBuildIndex(embeddings.where(lit(false)), empty.toString, codec))
+      assert(e1.getMessage.contains("empty coarse quantizer"), s"$codec: ${e1.getMessage}")
+      // no coarse cells over a non-empty corpus
+      val noCells = java.nio.file.Paths.get(base, "nocells")
+      val e2 = intercept[IllegalArgumentException](
+        Similarity.ivfBuildIndex(embeddings, noCells.toString, codec, nCells = 0))
+      assert(e2.getMessage.contains("empty coarse quantizer"), s"$codec: ${e2.getMessage}")
+      Seq(empty, noCells).foreach { p =>
+        assert(!java.nio.file.Files.exists(p), s"$codec: $p written")
+        assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p + "_header")),
+          s"$codec: ${p}_header written")
+      }
     }
+  }
+
+  test("IVF probe reads its coarse quantizer from the index header") {
+    // built with nCells = 8; the probe takes no cell argument, so it can
+    // only agree with the one-shot IVF over 8 cells by reading the header
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-hdr").toString + "/index"
+    Similarity.ivfBuildIndex(embeddings, dir, Similarity.Flat, nCells = 8)
+    val probed = Similarity.ivfProbeIndex(spark, dir, embeddings).collect().toSet
+    assert(probed.nonEmpty)
+    assert(probed == Similarity.ivfTopK(embeddings, nCells = 8).collect().toSet)
+    assert(probed != Similarity.ivfTopK(embeddings, nCells = 16).collect().toSet,
+      "8 and 16 cells must differ on this corpus for the check to mean anything")
+  }
+
+  test("IVF index header without a known codec row fails naming its path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-bad").toString + "/index"
+    Similarity.ivfBuildIndex(embeddings, dir, Similarity.Flat)
+    val header = dir + "_header"
+    val rows = graft.engine.TableIO.read(spark, header)
+      .as[(String, Long, Seq[Double], Double)].collect().toSeq
+    def rewrite(kept: Seq[(String, Long, Seq[Double], Double)]): Unit =
+      graft.engine.TableIO.write(kept.toDF("kind", "id", "vec", "x"), header)
+    rewrite(rows.filterNot(_._1.startsWith("codec:")))
+    val noCodec = intercept[IllegalStateException](
+      Similarity.ivfProbeIndex(spark, dir, embeddings))
+    assert(noCodec.getMessage.contains(header) &&
+      noCodec.getMessage.contains("no codec row"), noCodec.getMessage)
+    rewrite(rows.map(r => if (r._1.startsWith("codec:")) r.copy(_1 = "codec:opq") else r))
+    val unknown = intercept[IllegalStateException](
+      Similarity.ivfAppendIndex(spark, dir, embeddings))
+    assert(unknown.getMessage.contains(header) &&
+      unknown.getMessage.contains("unknown codec 'opq'"), unknown.getMessage)
   }
 
   test("lshParams: corpus-sized tables, recall-solved table count") {
@@ -361,26 +397,31 @@ class OpsSpec extends SparkSpec {
   }
 
   test("IVF-PQ incremental append equals the one-shot build; empty batch is a no-op") {
-    val base = java.nio.file.Files.createTempDirectory("graft-pq-inc").toString
-    val full = base + "/full"
-    Similarity.ivfPqBuildIndex(embeddings, full)
-    val oneShot = Similarity.ivfPqProbeIndex(spark, full, embeddings).collect().toSet
-    // split the candidates across two ingest batches (split point must
-    // exist in the sparse sf0.001 id space — derive it from the data)
-    val splitId = embeddings.where(col("vec_id") >= 24)
-      .agg(expr("percentile(vec_id, 0.5D)")).head().getDouble(0).toLong
-    val inc = base + "/inc"
-    Similarity.ivfPqBuildIndex(embeddings.where(col("vec_id") < splitId), inc)
-    Similarity.ivfPqAppendIndex(spark, inc,
-      embeddings.where(col("vec_id") >= splitId))
-    assert(Similarity.ivfPqProbeIndex(spark, inc, embeddings).collect().toSet
-      == oneShot,
-      "append against stored quantizers must reproduce the one-shot index")
-    // an empty batch appends nothing and changes nothing
-    Similarity.ivfPqAppendIndex(spark, inc,
-      embeddings.where(col("vec_id") < -1))
-    assert(Similarity.ivfPqProbeIndex(spark, inc, embeddings).collect().toSet
-      == oneShot)
+    // Sq8 is left out by design: its per-dimension min/scale are trained on
+    // the build's candidates only, so appended vectors outside that range
+    // clamp and an append is not equal to a one-shot build
+    Seq(Similarity.Flat, Similarity.Pq()).foreach { codec =>
+      val base = java.nio.file.Files.createTempDirectory("graft-ivf-inc").toString
+      val full = base + "/full"
+      Similarity.ivfBuildIndex(embeddings, full, codec)
+      val oneShot = Similarity.ivfProbeIndex(spark, full, embeddings).collect().toSet
+      // split the candidates across two ingest batches (split point must
+      // exist in the sparse sf0.001 id space — derive it from the data)
+      val splitId = embeddings.where(col("vec_id") >= 24)
+        .agg(expr("percentile(vec_id, 0.5D)")).head().getDouble(0).toLong
+      val inc = base + "/inc"
+      Similarity.ivfBuildIndex(embeddings.where(col("vec_id") < splitId), inc, codec)
+      Similarity.ivfAppendIndex(spark, inc,
+        embeddings.where(col("vec_id") >= splitId))
+      assert(Similarity.ivfProbeIndex(spark, inc, embeddings).collect().toSet
+        == oneShot,
+        s"$codec: append against stored quantizers must reproduce the one-shot index")
+      // an empty batch appends nothing and changes nothing
+      Similarity.ivfAppendIndex(spark, inc,
+        embeddings.where(col("vec_id") < -1))
+      assert(Similarity.ivfProbeIndex(spark, inc, embeddings).collect().toSet
+        == oneShot, s"$codec: empty append changed the index")
+    }
   }
 
   test("compiled PQ encoder == declarative HOF argmin over the corpus") {
@@ -458,14 +499,15 @@ class OpsSpec extends SparkSpec {
       (exact & got).size.toDouble / exact.size
     }
     val seed = recall(Similarity.ivfTopK(embeddings, k = 5))
-    val km = recall(Similarity.ivfTopKKmeans(embeddings, k = 5))
+    val km = recall(Similarity.ivfTopK(embeddings, k = 5,
+      quantizer = Similarity.kmeansCentroids))
     assert(km >= 0.2, s"k-means IVF recall too low: $km")
     assert(km >= seed - 0.11, s"trained quantizer recall $km far below seed $seed")
   }
 
   test("similarity: persisted IVF index builds once, probes repeatedly with pruning") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString + "/index"
-    Similarity.ivfBuildIndex(embeddings, dir)
+    Similarity.ivfBuildIndex(embeddings, dir, Similarity.Flat)
     val p1 = Similarity.ivfProbeIndex(spark, dir, embeddings)
     val p2 = Similarity.ivfProbeIndex(spark, dir, embeddings)
     // repeat probes over the same persisted index are deterministic

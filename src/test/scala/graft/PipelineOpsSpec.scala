@@ -77,8 +77,8 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("IVF×SQ8 persisted index: pruned probe, near-full-precision recall") {
     val path = Files.createTempDirectory("graft-ivfsq8").toString + "/idx"
-    Similarity.ivfSq8BuildIndex(embeddings, path)
-    val probed = Similarity.ivfSq8ProbeIndex(spark, path, embeddings)
+    Similarity.ivfBuildIndex(embeddings, path, Similarity.Sq8)
+    val probed = Similarity.ivfProbeIndex(spark, path, embeddings)
     // only the probed cells' partitions are scanned (static pruning)
     val plan = probed.queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cell_id".r.findFirstIn(plan).isDefined,
